@@ -3,16 +3,20 @@
 The reference writes canonically-sorted TriG with explicit predicate
 sort priorities so output is deterministic and diffable
 (MigrationHelpers.setupSTTL:528-552, modelToOutputStream:587-641).  Here
-each named graph serializes to sorted N-Quads-style lines inside one
-`applyInPandas` over the graph key — distributed, deterministic, and
-safe under retries because line order is a pure sort of row content.
+each named graph serializes to sorted N-Quads-style lines in plain Spark
+SQL expressions, with no Python worker: one `groupBy(graph)` collects and
+sorts the rows, and the body and its sha256 are built in the JVM.  Line
+order is a pure sort of row content, so output is safe under retries.
+
+`serialize_row` and `_PRIORITY` are the same rules in Python, the
+reference that tests and benchmark pins check against.  Spark orders
+strings by UTF-8 bytes, which is Python's code-point order.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-SERIALIZED_SCHEMA = "graph string, body string, sha256 string"
+from pyspark.sql import functions as F
 
 # the reference's predicate sort priorities put types and labels first
 _PRIORITY = {
@@ -21,11 +25,14 @@ _PRIORITY = {
     "http://www.w3.org/2000/01/rdf-schema#label": 2,
 }
 
+# literal escapes, applied in this order
+_ESCAPES = (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"))
+
 
 def _escape(s: str) -> str:
-    return (
-        s.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n").replace("\r", "\\r")
-    )
+    for a, b in _ESCAPES:
+        s = s.replace(a, b)
+    return s
 
 
 def serialize_row(s: str, p: str, kind: str, value: str, lang, dt) -> str:
@@ -45,39 +52,28 @@ def serialize_graphs(triples: DataFrame) -> DataFrame:
 
     The sha256 column is the per-graph content hash used for diffable
     output and idempotent re-publication (the Spark analog of the
-    reference's git-diffable TriG files)."""
-    repo = __file__.rsplit("/xmltoldmigration_spark/", 1)[0]
-
-    def run(pdf):
-        import hashlib
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        import pandas as pd
-
-        from xmltoldmigration_spark.kg.serialize import _PRIORITY, serialize_row
-
-        out = []
-        for graph, g in pdf.groupby("graph"):
-            lines = [
-                serialize_row(r.subject, r.predicate, r.o_kind, r.o_value, r.o_lang, r.o_datatype)
-                for r in g.itertuples(index=False)
-            ]
-            keyed = sorted(
-                zip(
-                    (
-                        (r.subject, _PRIORITY.get(r.predicate, 9), r.predicate)
-                        for r in g.itertuples(index=False)
-                    ),
-                    lines,
-                )
-            )
-            body = "\n".join(line for _, line in keyed) + "\n"
-            out.append(
-                (graph, body, hashlib.sha256(body.encode("utf-8")).hexdigest())
-            )
-        return pd.DataFrame(out, columns=["graph", "body", "sha256"])
-
-    cols = ["graph", "subject", "predicate", "o_kind", "o_value", "o_lang", "o_datatype"]
-    return triples.select(*cols).groupBy("graph").applyInPandas(run, SERIALIZED_SCHEMA)
+    reference's git-diffable TriG files).  Rows with a NULL graph are
+    dropped; a NULL subject, predicate or o_value fails the job."""
+    value = F.col("o_value")
+    for a, b in _ESCAPES:
+        value = F.replace(value, F.lit(a), F.lit(b))
+    quoted = F.concat(F.lit('"'), value, F.lit('"'))
+    obj = (
+        F.when(F.col("o_kind") == "iri", F.concat(F.lit("<"), "o_value", F.lit(">")))
+        .when(F.length("o_lang") > 0, F.concat(quoted, F.lit("@"), "o_lang"))
+        .when(F.length("o_datatype") > 0, F.concat(quoted, F.lit("^^<"), "o_datatype", F.lit(">")))
+        .otherwise(quoted)
+    )
+    null = F.col("subject").isNull() | F.col("predicate").isNull() | F.col("o_value").isNull()
+    msg = F.concat(F.lit("NULL subject, predicate or o_value in graph "), "graph")
+    head = F.concat(F.lit("<"), "subject", F.lit("> <"), "predicate", F.lit("> "))
+    line = F.when(null, F.raise_error(msg)).otherwise(F.concat(head, obj, F.lit(" .")))
+    prio = F.lit(9)
+    for pred, rank in _PRIORITY.items():
+        prio = F.when(F.col("predicate") == pred, rank).otherwise(prio)
+    # sort key as the reference's: (subject, priority, predicate), then the line
+    keyed = F.struct("subject", prio.alias("prio"), "predicate", line.alias("line"))
+    lines = F.transform(F.array_sort(F.collect_list(keyed)), lambda x: x["line"])
+    body = F.concat(F.array_join(lines, "\n"), F.lit("\n"))
+    out = triples.filter(F.col("graph").isNotNull()).groupBy("graph").agg(body.alias("body"))
+    return out.withColumn("sha256", F.sha2("body", 256))

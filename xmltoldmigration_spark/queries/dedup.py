@@ -35,10 +35,12 @@ JACCARD_THRESHOLD = 0.8
 # Each shingle is carried as a single xxhash64 LONG over the token triple,
 # never as the ~25-byte joined string: tokens contain no whitespace (they
 # come from a whitespace split), so the (tok_j, tok_j+1, tok_j+2) -> hash
-# map collides only on a 64-bit hash collision (~1e-6 birthday odds even at
-# 5M shingles), and every downstream step — per-doc distinct, the 64-way
-# min-hash signature, the inverted-index join, and the exact-verify
-# equi-join — only ever compares shingles for EQUALITY.  Cuts the dominant
+# map collides only on a 64-bit hash collision.  At the validated scale
+# factors (~1e-6 birthday odds even at 5M shingles) the equivalence is
+# exact; at 1e9+ distinct shingles it holds only with high probability
+# (~3% odds of one collision at 1e9).  Every downstream step — per-doc
+# distinct, the 64-way min-hash signature, the inverted-index join, and
+# the exact-verify equi-join — only ever compares shingles for EQUALITY.  Cuts the dominant
 # shuffle/aggregate byte width ~3x; jaccard counts are unchanged, so the
 # string-based DuckDB oracle still matches value-for-value.
 _SHINGLES_EXPR = """
