@@ -371,6 +371,42 @@ def test_materialize_all_equals_fused(spark, tmp_path):
     assert again.count() == allm.count()
     stages = {r["stage"] for r in pa.lineage()}
     assert {"parsed", "linked", "completed", "canonical", "graph"} <= stages
+    # fused observe points and persisted writes record the same lineage
+    chain = ("linked", "completed", "canonical", "graph")
+    lin_f = {r["stage"]: r for r in Pipeline(spark, str(tmp_path / "fused")).lineage()}
+    lin_a = {r["stage"]: r for r in pa.lineage()}
+    for stage in chain:
+        assert (lin_f[stage]["rows"], lin_f[stage]["value_hash"]) == (
+            lin_a[stage]["rows"], lin_a[stage]["value_hash"]), stage
+    assert all(lin_f[s].get("fused") is True and "wall_s" not in lin_f[s]
+               for s in chain[:-1])
+    # resume from the middle: canonical and graph rebuilt from completed/
+    for stage in ("canonical", "graph"):
+        shutil.rmtree(tmp_path / "all" / stage)
+    Pipeline(spark, str(tmp_path / "all")).run(src, resume=True, materialize="all")
+    assert (tmp_path / "all" / "graph" / "_DONE").exists()
+    rebuilt = {r["stage"]: r for r in pa.lineage()}
+    assert rebuilt["graph"]["value_hash"] == lin_a["graph"]["value_hash"]
+    # read back, not rewritten: a rewrite would list new part-file names
+    assert rebuilt["completed"] == lin_a["completed"]
+    with pytest.raises(ValueError):
+        Pipeline(spark, str(tmp_path / "typo")).run(src, materialize="al")
+
+
+def test_empty_src(spark, tmp_path):
+    """A 0-record src gives an empty graph table, rows == 0 in every
+    lineage row (persisted and fused), and a working resume."""
+    from xmltoldmigration_spark.sources.corpus import SRC_SCHEMA
+
+    src = spark.createDataFrame([], SRC_SCHEMA)
+    out = tmp_path / "empty"
+    pipe = Pipeline(spark, str(out))
+    assert pipe.run(src, resume=False).count() == 0
+    rows = {r["stage"]: r["rows"] for r in pipe.lineage()}
+    assert set(rows) == {"parsed", "linked", "completed", "canonical", "graph",
+                         "errors", "dangling", "conflicts"}
+    assert set(rows.values()) == {0}
+    assert Pipeline(spark, str(out)).run(src, resume=True).count() == 0
 
 
 def test_multimodal_resize_and_features(spark):

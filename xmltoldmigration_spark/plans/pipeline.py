@@ -1,12 +1,22 @@
 """The KG-construction pipeline: parse -> link -> symmetric -> canonicalize
--> write, with per-stage checkpointing and resume (SURVEY.md §3.4).
+-> write, with per-stage lineage and resume (SURVEY.md §3.4).
 
-Each stage materializes to parquet under `out_dir/<stage>/` and records a
-lineage row (stage, partitions, rows, value hash, wall seconds) in
-`out_dir/_lineage/`.  A `_DONE` marker makes the stage skippable: rerunning
-the pipeline after a failure resumes mid-pipeline (north_rule
-resumability), because every stage is a pure function of the previous
-stage's parquet + the deterministic authority tables.
+`parsed`, the final `graph` table and the side tables (errors, dangling,
+conflicts) always materialize to parquet under `out_dir/<stage>/`.  By
+default (`materialize="minimal"`) the chain stages between them — `linked`,
+`completed`, `canonical` — fuse into the one graph write, and each reports
+its lineage through an observe() point inside that plan.
+`materialize="all"` persists those three stages too, so a resume can
+restart from any of them, at the cost of writing the triple table four
+times.
+
+Every stage records a lineage row in `out_dir/_lineage/<stage>.json`: row
+count and an order-insensitive value hash; persisted stages add wall
+seconds and per-file row counts, fused stages are marked `fused`.  A
+persisted stage's `_DONE` marker holds its schema and makes it skippable:
+rerunning the pipeline after a failure resumes after the last finished
+stage (north_rule resumability), because every stage is a pure function of
+the previous stage's output + the deterministic authority tables.
 
 Scale notes (100 TB / 1000 executors):
 - stage 1 (parse) is shuffle-free mapInArrow over the Iceberg scan;
@@ -27,12 +37,16 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from xmltoldmigration_spark.kg.parse import parse_src, split_streams
 
 N_SUBJECT_BUCKETS = 64
+
+# per-file row counts listed in a stage's lineage; the rest are summed
+LISTED_FILES = 512
 
 
 def _authority_rep_pairs() -> list[tuple[str, str]]:
@@ -90,27 +104,41 @@ class Pipeline:
     def _done(self, name: str) -> bool:
         return (self._stage_dir(name) / "_DONE").exists()
 
-    def _write_stage(self, name: str, df: DataFrame, partition_by: list[str] | None = None,
-                     co_scheduled: bool = False):
-        t0 = time.time()
-        path = str(self._stage_dir(name))
-        # lineage metrics ride along with the write via observe() — row
-        # count + order-insensitive content hash (bit_xor of row hashes,
-        # partition-order invariant) at zero extra passes
-        from pyspark.sql import Observation
-
+    def _observe(self, name: str, df: DataFrame):
+        """`df` with its lineage metrics attached, and a function returning
+        them once an action has run the plan: row count + order-insensitive
+        content hash (bit_xor of row hashes, partition-order invariant),
+        at zero extra passes."""
         obs = Observation(f"lineage_{name}")
         observed = df.observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
-            F.expr("bit_xor(xxhash64(" + ", ".join(df.columns) + "))").alias("value_hash"),
+            F.bit_xor(F.xxhash64(*df.columns)).alias("value_hash"),
         )
+
+        def stats() -> dict:
+            # the optimizer drops a subtree it proves empty, observe point
+            # included, and the action then reports no metrics row at all;
+            # the hash of no rows is a NULL bit_xor either way
+            m = obs.get if obs._jo.getRow().length() else {"rows": 0, "value_hash": None}
+            return {"rows": m["rows"], "value_hash": str(m["value_hash"])}
+
+        return observed, stats
+
+    def _record(self, name: str, lineage: dict) -> None:
+        with open(self.out / "_lineage" / f"{name}.json", "w") as f:
+            json.dump({"stage": name, **lineage}, f)
+
+    def _write_stage(self, name: str, df: DataFrame, partition_by: list[str] | None = None,
+                     co_scheduled: bool = False) -> DataFrame:
+        t0 = time.time()
+        path = self._stage_dir(name)
+        observed, stats = self._observe(name, df)
         writer = observed.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        stats = obs.get
-        written = self.spark.read.parquet(path)
+        writer.parquet(str(path))
+        lineage = stats()
         # per-partition lineage (north_rule): row count per output file read
         # straight from the parquet FOOTERS — no second scan of the data
         # pages (on a cluster the same metadata comes from the FileSystem
@@ -118,49 +146,39 @@ class Pipeline:
         import pyarrow.parquet as pq
         from concurrent.futures import ThreadPoolExecutor
 
-        all_files = sorted(
-            p for p in Path(path).rglob("*.parquet") if not p.name.startswith(".")
-        )
-        part_files = all_files[:512]
-
-        def _footer(p):
-            return {"file": p.name, "rows": pq.ParquetFile(p).metadata.num_rows}
-
+        files = sorted(p for p in path.rglob("*.parquet") if not p.name.startswith("."))
         # footer reads are I/O-bound; a small pool keeps this out of the
         # per-stage serial component
         with ThreadPoolExecutor(max_workers=8) as ex:
-            per_file = list(ex.map(_footer, part_files))
-        lineage = {
-            "stage": name,
-            "rows": stats["rows"],
-            "value_hash": str(stats["value_hash"]),
-            "wall_s": round(time.time() - t0, 3),
-            "partitions": per_file,
-        }
+            counts = list(ex.map(lambda p: pq.ParquetFile(p).metadata.num_rows, files))
+        lineage["wall_s"] = round(time.time() - t0, 3)
+        lineage["partitions"] = [
+            {"file": p.name, "rows": n} for p, n in zip(files[:LISTED_FILES], counts)
+        ]
         # side stages submitted concurrently with the main graph write:
         # wall_s is ELAPSED under core-sharing (includes scheduler wait),
         # not the stage's exclusive cost — mark it so lineage consumers
         # don't read co-scheduled elapsed time as per-stage work
         if co_scheduled:
             lineage["co_scheduled"] = True
-        # At cluster scale a stage writes thousands of files; the per-file
-        # list keeps the first 512 but the truncation is MARKED (total file
-        # count + remainder row sum) so lineage consumers never mistake the
-        # sample for the whole write.
-        if len(all_files) > 512:
-            rest = all_files[512:]
-            with ThreadPoolExecutor(max_workers=8) as ex:
-                rest_rows = sum(r["rows"] for r in ex.map(_footer, rest))
+        # At cluster scale a stage writes thousands of files; the truncation
+        # of the per-file list is MARKED (total file count + remainder row
+        # sum) so lineage consumers never mistake the sample for the whole
+        # write.
+        if len(files) > LISTED_FILES:
             lineage["truncated"] = True
-            lineage["n_files_total"] = len(all_files)
-            lineage["rows_in_unlisted_files"] = rest_rows
-        with open(self.out / "_lineage" / f"{name}.json", "w") as f:
-            json.dump(lineage, f)
-        (self._stage_dir(name) / "_DONE").touch()
-        return written
+            lineage["n_files_total"] = len(files)
+            lineage["rows_in_unlisted_files"] = sum(counts[LISTED_FILES:])
+        self._record(name, lineage)
+        (path / "_DONE").write_text(df.schema.json())
+        return self._read_stage(name)
 
     def _read_stage(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._stage_dir(name)))
+        """A finished stage, read with the schema its `_DONE` marker holds:
+        an empty stage has no parquet file to infer one from."""
+        path = self._stage_dir(name)
+        schema = StructType.fromJson(json.loads((path / "_DONE").read_text()))
+        return self.spark.read.schema(schema).parquet(str(path))
 
     def lineage(self) -> list[dict]:
         rows = []
@@ -173,14 +191,17 @@ class Pipeline:
     def run(self, src: DataFrame, resume: bool = True,
             materialize: str = "minimal",
             extra_parsed: DataFrame | None = None) -> DataFrame:
-        """materialize='minimal' (default): stages 2-5 fuse into ONE
-        write — Catalyst pipelines the narrow joins/dedups, and per-stage
-        lineage still lands via observe() points inside the single plan.
-        Materializing every stage ('all') quadruples the I/O on the full
-        triple set, which is the single-node bottleneck (each pass writes
-        the whole table); at cluster scale the same fusion argument holds
-        per-executor.  Resume granularity: parsed + graph ('minimal') or
-        every stage ('all')."""
+        """Build the graph table from `src` and return it.
+
+        materialize="minimal" (default) persists only `graph` of the chain
+        stages: Catalyst pipelines the narrow joins/dedups of `linked`,
+        `completed` and `canonical` into that one write, and their lineage
+        lands via observe() points inside the single plan.  "all" persists
+        every chain stage, which quadruples the I/O on the full triple set,
+        the single-node bottleneck; in exchange a resume restarts after the
+        last finished chain stage instead of only after `parsed`/`graph`."""
+        if materialize not in ("minimal", "all"):
+            raise ValueError(f"materialize must be 'minimal' or 'all', not {materialize!r}")
         # stage 1: PARSE (record-local, no shuffle)
         if resume and self._done("parsed"):
             parsed = self._read_stage("parsed")
@@ -194,27 +215,20 @@ class Pipeline:
             # partition the tagged union by stream: every downstream
             # stage filters on exactly one stream value, so the filter
             # becomes partition PRUNING — the triple chain reads only
-            # triple files, the error/dangling/conflict side tables read
-            # only their (tiny) streams instead of re-scanning the full
-            # parse output
+            # triple files, the side tables read only their (tiny) streams
             parsed = self._write_stage("parsed", parsed, partition_by=["stream"])
         streams = split_streams(parsed)
-        # the set of migrated graphs is invariant through link/admin/
-        # backlink stages (they only rewrite objects or add rows into
-        # graphs that already exist), so compute it ONCE from the parsed
-        # triples — a single column-pruned scan of the parse output —
-        # and reuse it in every existence semi/anti-join.  Without this
-        # each `.distinct()` re-executed the whole join chain (3 extra
-        # full-chain runs per pipeline).  localCheckpoint materializes
-        # the small list on first use.
+        # the set of migrated graphs is invariant through the link stage
+        # (it only rewrites objects or adds rows into graphs that already
+        # exist), so it is computed ONCE from one column-pruned scan of the
+        # parsed triples and reused by every existence semi/anti-join.
         cores = self.spark.sparkContext.defaultParallelism
         # eager ONLY when side-table jobs will actually run CONCURRENTLY
         # with the main graph write (>=4 cores AND at least one side stage
         # pending): two threads racing to materialize one lazy checkpoint
-        # would compute it twice.  On a fully-warm resume (graph + all
-        # sides done) nothing consumes `graphs`, so an unconditional eager
-        # checkpoint would pay a full distinct-over-parse job per call —
-        # measured as the dominant per-query cost of warm kg bench runs.
+        # would compute it twice.  On a fully-warm resume nothing consumes
+        # `graphs`, so an eager checkpoint would pay a full distinct over
+        # the parse output for nothing.
         sides_pending = [
             s for s in ("errors", "dangling", "conflicts")
             if not (resume and self._done(s))
@@ -224,64 +238,44 @@ class Pipeline:
             .localCheckpoint(eager=cores >= 4 and bool(sides_pending))
         )
 
-        def _run_main() -> DataFrame:
-            if materialize == "all":
-                # stage 2: LINK (J1 runtime redirects + J13 admin
-                # propagation + J14 etext back-links — same chain as the
-                # fused path)
-                if resume and self._done("linked"):
-                    triples = self._read_stage("linked")
-                else:
-                    linked = self._link(streams)
-                    linked = self._propagate_work_admin(linked, streams, graphs)
-                    linked = self._etext_backlinks(linked, streams, graphs)
-                    linked = self._resolve_etext_pages(linked, streams)
-                    triples = self._write_stage("linked", linked)
-                # stage 3: SYMMETRIC COMPLETION (A1)
-                if resume and self._done("completed"):
-                    triples = self._read_stage("completed")
-                else:
-                    triples = self._write_stage(
-                        "completed",
-                        self._complete_symmetric(triples, streams["symmetric"], graphs),
-                    )
-                # stage 4: CANONICALIZE (G1/G2)
-                if resume and self._done("canonical"):
-                    triples = self._read_stage("canonical")
-                else:
-                    triples = self._write_stage("canonical", self._canonicalize(triples))
-                # stage 5: WRITE final graph table
-                if resume and self._done("graph"):
-                    return self._read_stage("graph")
-                return self._write_stage(
-                    "graph",
-                    self._finalize(triples, streams["triples"]),
-                    partition_by=["type_part"],
-                )
-            if resume and self._done("graph"):
-                return self._read_stage("graph")
-            from pyspark.sql import Observation
-
-            triples = self._link(streams)
+        def link(triples: DataFrame) -> DataFrame:
+            # J1 runtime redirects, J13 admin propagation, J14 etext
+            # back-links, etext page-name translation
+            triples = self._link(triples, streams["redirects"])
             triples = self._propagate_work_admin(triples, streams, graphs)
             triples = self._etext_backlinks(triples, streams, graphs)
-            triples = self._resolve_etext_pages(triples, streams)
-            obs_link = Observation("linked")
-            triples = triples.observe(obs_link, F.count(F.lit(1)).alias("rows"))
-            triples = self._complete_symmetric(triples, streams["symmetric"], graphs)
-            obs_sym = Observation("completed")
-            triples = triples.observe(obs_sym, F.count(F.lit(1)).alias("rows"))
-            triples = self._canonicalize(triples)
-            final = self._write_stage(
-                "graph",
-                self._finalize(triples, streams["triples"]),
-                partition_by=["type_part"],
-            )
-            for name, obs in (("linked", obs_link), ("completed", obs_sym)):
-                with open(self.out / "_lineage" / f"{name}.json", "w") as f:
-                    json.dump({"stage": name, "rows": obs.get["rows"],
-                               "fused": True}, f)
-            return final
+            return self._resolve_etext_pages(triples, streams)
+
+        chain = [
+            ("linked", link),
+            ("completed", lambda t: self._complete_symmetric(t, streams["symmetric"], graphs)),
+            ("canonical", self._canonicalize),
+            ("graph", lambda t: self._finalize(t, streams["triples"])),
+        ]
+        persisted = [name for name, _ in chain] if materialize == "all" else ["graph"]
+
+        def _run_main() -> DataFrame:
+            start, triples = 0, streams["triples"]
+            if resume:
+                for i, (name, _) in enumerate(chain):
+                    if name in persisted and self._done(name):
+                        start = i + 1
+                if start:
+                    triples = self._read_stage(chain[start - 1][0])
+            fused = []
+            for name, fn in chain[start:]:
+                if name in persisted:
+                    triples = self._write_stage(
+                        name, fn(triples),
+                        partition_by=["type_part"] if name == "graph" else None,
+                    )
+                else:
+                    triples, stats = self._observe(name, fn(triples))
+                    fused.append((name, stats))
+            # `graph` always persists, so its write has run every fused plan
+            for name, stats in fused:
+                self._record(name, {**stats(), "fused": True})
+            return triples
 
         # side tables (errors / dangling links / imagegroup conflicts):
         # independent of the triple chain — they derive from the parse
@@ -324,12 +318,11 @@ class Pipeline:
                 t()
         return final
 
-    def _link(self, streams: dict) -> DataFrame:
+    def _link(self, triples: DataFrame, redirects: DataFrame) -> DataFrame:
         """J1: apply run-time discovered redirects (withdrawn records) to
         IRI objects.  The static ridReplacements table was already applied
         record-locally in the parse stage (MigrationHelpers.sanitizeRID)."""
-        triples = streams["triples"]
-        redirects = streams["redirects"].dropDuplicates(["old_rid"])
+        redirects = redirects.dropDuplicates(["old_rid"])
         bdr = "http://purl.bdrc.io/resource/"
         red = redirects.select(
             F.concat(F.lit(bdr), "old_rid").alias("_old_iri"),
@@ -708,7 +701,3 @@ class Pipeline:
         )
         return links.join(released, "dst_rid", "left_anti")
 
-
-def run_pipeline(spark: SparkSession, src: DataFrame, out_dir: str, resume: bool = True,
-                 extra_parsed: DataFrame | None = None) -> DataFrame:
-    return Pipeline(spark, out_dir).run(src, resume=resume, extra_parsed=extra_parsed)
